@@ -15,6 +15,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from kinesis_to_firehose_spark.registry import all_ops
 from kinesis_to_firehose_spark.session import get_spark
+from tools.measure import ACTIONS, measure
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Per-op timing repeats (best-of-N). 3 absorbs JVM/codegen warmup at
@@ -24,36 +25,17 @@ REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 # Per-op artifact name — the sf1 anchor writes BENCH_SF1.json so the
 # sf0.1 map of record is never clobbered by a scale run.
 OPS_OUT = os.environ.get("SPARK_GRAFT_BENCH_OUT", "BENCH_OPS.json")
-# Timed action (r12 measurement fix, guide §1.4 / r11 verdict #1):
-# `count()` let Catalyst prune final projections/sorts — the whole
-# decode+serialize pipeline of a narrow-map op column-pruned down to
-# a column-less scan (serialize_jsonl's count plan was
-# Aggregate[count(1)] ← Project[] ← Relation), making those rows'
-# scale envelopes vacuous. The noop sink computes EVERY column of
-# every row and discards it. `SPARK_GRAFT_BENCH_ACTION=count`
-# restores the old action for apples-to-apples comparison against
-# pre-r12 artifacts.
+# Timed action, noop or count: see tools/measure.py for why the
+# noop sink is the default. `SPARK_GRAFT_BENCH_ACTION=count` restores
+# the pre-r12 action for comparison against older artifacts.
 ACTION = os.environ.get("SPARK_GRAFT_BENCH_ACTION", "noop")
 # ADVICE r12: a typo'd action ('Count', 'counts') used to silently
 # fall through to the noop sink while the artifact recorded the bogus
 # string — a mislabeled run that looks like a valid comparison.
-if ACTION not in ("noop", "count"):
+if ACTION not in ACTIONS:
     raise SystemExit(
         f"SPARK_GRAFT_BENCH_ACTION={ACTION!r} is not one of: noop, count"
     )
-
-# Headline set: every registered op except the end-to-end streaming
-# protocol ops — each spins up full Structured Streaming pipelines
-# against temp dirs (source-slice writes, checkpoints, Python worker
-# pools) and measures protocol correctness, not query throughput; the
-# compute they exercise is already timed via decode/serialize/batch
-# ops. They remain in queries() for the driver's correctness gate.
-EXCLUDE: set[str] = {
-    "firehose_sink",
-    "checkpoint_resume",
-    "kinesis_source",
-    "kinesis_replay_source",
-}
 
 
 def host_speed_sentinel() -> float:
@@ -77,12 +59,12 @@ def host_speed_sentinel() -> float:
 
 
 def main() -> None:
-    import contextlib
-
     from kinesis_to_firehose_spark.registry import over_cap
 
     spark = get_spark("kinesis-to-firehose-spark-bench")
-    ops = {k: v for k, v in all_ops().items() if k not in EXCLUDE}
+    # Headline set: every batch op (Op.streaming ops are checked for
+    # correctness, not timed for throughput)
+    ops = {k: v for k, v in all_ops().items() if not v.streaming}
     # registry scale caps (Op.max_rows): quadratic-by-design baseline
     # ops refuse corpora above their bound — skip-and-LOG so the
     # artifact shows what was dropped, never a silent truncation
@@ -94,66 +76,25 @@ def main() -> None:
             file=sys.stderr,
         )
         del ops[k]
-    # Opt-in multi-query scan sharing (SPARK_GRAFT_SHARED_SCAN=1):
-    # materialize the hot fact tables once for the whole sweep — the
-    # measured ~19% TPC-H-set win (SURVEY §6). Off by default so the
-    # per-op numbers stay per-op (the driver compares them to
-    # BASELINE.md, which is unshared).
-    shared = os.environ.get("SPARK_GRAFT_SHARED_SCAN") == "1"
-    if shared:
-        from kinesis_to_firehose_spark.sources.tables import materialized
-
-        share_ctx = materialized(spark, SF_DIR, ("lineitem", "orders"))
-    else:
-        share_ctx = contextlib.nullcontext()
     # Warm the JVM / codegen / parquet footer caches so timings measure
     # the queries, not first-run startup (~35s otherwise).
     for name in ("q1_pricing_summary",):
         if name in ops:
             ops[name].fn(spark, SF_DIR).count()
     timings: dict[str, float] = {}
-    # shared context closed even if an op raises mid-sweep (a leaked
-    # materialization would pin executor storage for the process life)
-    def timed_action(df):
-        if ACTION == "count":
-            return df.count()
-        df.write.format("noop").mode("overwrite").save()
-        return None
-
-    with share_ctx:
-        for name, op in sorted(ops.items()):
-            # Untimed rows count: sanity signal for the artifact (and
-            # the session warm-up the old count-as-action provided).
-            n = op.fn(spark, SF_DIR).count()
-            # Best of three: first runs after heavy neighbors pay JVM
-            # lazy-cleanup/codegen-cache penalties and transient host
-            # stalls that are session artifacts, not query cost
-            # (verified: 17s → 0.4s on immediate repeat, no caching).
-            best = None
-            # Untimed settle: collect the previous op's JVM garbage so
-            # its major-GC debt doesn't land inside this op's timing
-            # window (observed: 0.3s ops reading 3.7s mid-bench).
-            spark.sparkContext._jvm.System.gc()
-            runs = 0
-            for _ in range(REPEATS):
-                t0 = time.perf_counter()
-                timed_action(op.fn(spark, SF_DIR))
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-                runs += 1
-            # Sub-second ops are the recurring false-flag cluster —
-            # three rounds of judges re-adjudicated 1.3-2x session
-            # noise on them (round-10 verdict task 4). Session noise
-            # is a fixed ± tens-of-ms floor, so it dominates exactly
-            # the ops where extra repeats are cheapest: keep running
-            # until 5 reps once best-of is under a second.
-            while best < 1.0 and runs < 5:
-                t0 = time.perf_counter()
-                timed_action(op.fn(spark, SF_DIR))
-                best = min(best, time.perf_counter() - t0)
-                runs += 1
-            timings[name] = round(best, 3)
-            print(f"# {name}: {best:.3f}s rows={n}", file=sys.stderr)
+    layers: dict[str, dict] = {}
+    for name, op in sorted(ops.items()):
+        # Untimed rows count: sanity signal for the artifact (and
+        # the session warm-up the old count-as-action provided).
+        n = op.fn(spark, SF_DIR).count()
+        m = measure(spark, op.fn, SF_DIR, action=ACTION, reps=REPEATS)
+        timings[name] = round(m.best_s, 3)
+        layers[name] = {
+            "build_s": round(m.build_s, 3),
+            "action_s": round(m.action_s, 3),
+            "build_jobs": m.build_jobs,
+        }
+        print(f"# {name}: {m.best_s:.3f}s rows={n}", file=sys.stderr)
     total = sum(timings.values())
     try:
         sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1])
@@ -176,8 +117,10 @@ def main() -> None:
         "value": round(total, 3),
         "unit": "sec",
         "queries": timings,
+        # per-op split of each `queries` entry (best run): DataFrame
+        # construction vs action, and the Spark jobs construction ran
+        "layers": layers,
         "sf": sf,
-        "shared_scan": shared,
         "host_sentinel_sec": sentinel,
         "parity_stamp": parity_stamp,
         "scale_capped_skipped": capped,
@@ -196,7 +139,6 @@ def main() -> None:
         "queries_file": OPS_OUT,
         "n_ops": len(timings),
         "sf": sf,
-        "shared_scan": shared,
         "host_sentinel_sec": sentinel,
         "parity_stamp": parity_stamp,
     }

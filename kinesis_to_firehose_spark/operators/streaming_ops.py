@@ -32,6 +32,7 @@ FROM events
 GROUP BY event_type
 ORDER BY stream
 """
+N_RECORDS_SQL = "SELECT COUNT(*) AS n_records FROM events"
 
 
 def _delivered_counts(spark: SparkSession, root: str) -> DataFrame:
@@ -41,7 +42,7 @@ def _delivered_counts(spark: SparkSession, root: str) -> DataFrame:
     )
 
 
-@register("firehose_sink", COUNTS_BY_STREAM_SQL)
+@register("firehose_sink", COUNTS_BY_STREAM_SQL, streaming=True)
 def firehose_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full pipeline run: file-stream source → decode → Firehose sink;
     returns per-stream delivered counts (oracle: events by type —
@@ -57,7 +58,7 @@ def firehose_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _delivered_counts(spark, out)
 
 
-@register("checkpoint_resume", COUNTS_BY_STREAM_SQL)
+@register("checkpoint_resume", COUNTS_BY_STREAM_SQL, streaming=True)
 def checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the pipeline, stop it, restart from the same checkpoint with
     no new input: delivered counts must be unchanged (exactly-once).
@@ -77,7 +78,7 @@ def checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _delivered_counts(spark, out)
 
 
-@register("kinesis_source", "SELECT COUNT(*) AS n_records FROM events")
+@register("kinesis_source", N_RECORDS_SQL, streaming=True)
 def kinesis_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-read the events table through the file-source Kinesis
     simulator (availableNow semantics via processAllAvailable) and
@@ -100,7 +101,7 @@ def kinesis_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.table(name)
 
 
-@register("kinesis_replay_source", "SELECT COUNT(*) AS n_records FROM events")
+@register("kinesis_replay_source", N_RECORDS_SQL, streaming=True)
 def kinesis_replay_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the events table through the REAL connector surface —
     the `kinesis_replay` Python Data Source (one partition per shard,

@@ -23,14 +23,6 @@ from pyspark.sql import DataFrame
 
 from kinesis_to_firehose_spark.plans.explain import physical_plan
 
-# ops that spin up streaming pipelines; no static batch plan to digest
-_STREAMING = {
-    "firehose_sink",
-    "checkpoint_resume",
-    "kinesis_source",
-    "kinesis_replay_source",
-}
-
 _COUNTERS = {
     "exchanges": "Exchange",
     "broadcast_exchanges": "BroadcastExchange",
@@ -58,7 +50,7 @@ def digest_all(spark, sf_dir: str) -> dict[str, dict[str, int]]:
 
     out: dict[str, dict[str, int]] = {}
     for name, op in sorted(all_ops().items()):
-        if name in _STREAMING:
+        if op.streaming:  # no static batch plan to digest
             continue
         out[name] = plan_digest(op.fn(spark, sf_dir))
     return out

@@ -33,6 +33,11 @@ class Op:
     # None → the op scales (the default; only measured-truth baselines
     # like the exact all-pairs dedup_embedding carry a cap).
     max_rows: tuple[str, int] | None = None
+    # Streaming-protocol op: runs whole Structured Streaming pipelines
+    # against temp dirs. Checked for correctness, never timed for
+    # throughput (its compute is timed via the batch decode/serialize
+    # ops) and never plan-swept (it has no static batch plan).
+    streaming: bool = False
 
 
 _REGISTRY: dict[str, Op] = {}
@@ -42,11 +47,12 @@ def register(
     name: str,
     sql: str | None = None,
     max_rows: tuple[str, int] | None = None,
+    streaming: bool = False,
 ) -> Callable[[SparkFn], SparkFn]:
     def deco(fn: SparkFn) -> SparkFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate op {name!r}")
-        _REGISTRY[name] = Op(name, fn, sql, max_rows)
+        _REGISTRY[name] = Op(name, fn, sql, max_rows, streaming)
         return fn
 
     return deco

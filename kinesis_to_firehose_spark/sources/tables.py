@@ -34,16 +34,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BROADCAST_DIMS = frozenset({"region", "nation"})
 
 
-# (sf_dir, name) -> cached DataFrame, managed by `materialized()`
-_MATERIALIZED: dict[tuple[str, str], DataFrame] = {}
-
-
 def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    hit = _MATERIALIZED.get((sf_dir, name))
-    if hit is not None:
-        return hit
     if name == "events":
         # Runtime-set so sessions built OUTSIDE session.py (the driver
         # passes its own SparkSession) can still read the NANOS
@@ -69,43 +62,6 @@ def load(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFr
             # under UTC, and DuckDB's naive TIMESTAMP matches.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-from contextlib import contextmanager  # noqa: E402
-
-
-@contextmanager
-def materialized(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = ("lineitem",)
-):
-    """Multi-query scan sharing: cache the named tables once
-    (memory-and-disk) so every load() inside the context reuses the
-    materialization instead of re-scanning parquet — the right call
-    when a QUERY SET collectively touches most columns of a hot table
-    (the TPC-H sweep reads lineitem in 16 of 22 queries).
-
-    The tradeoff is explicit: a cached full table forfeits per-query
-    column pruning and predicate pushdown, so this only pays when the
-    set amortizes the one full scan AND the table fits the cluster's
-    storage memory. At 100 TB that means caching a shared pruned
-    PROJECTION (pass a pre-projected df through this pattern), or
-    relying on cluster-level parquet page caching instead. Measured
-    at sf0.1 (local[32]): the 22-query TPC-H sweep drops ~19% wall
-    (15.8 s → 12.7 s) with lineitem+orders materialized (SURVEY §6)."""
-    from pyspark import StorageLevel
-
-    handles = []
-    try:
-        for n in names:
-            df = load(spark, n, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-            df.count()  # eager: later queries share, never race, the build
-            _MATERIALIZED[(sf_dir, n)] = df
-            handles.append((n, df))
-        yield
-    finally:
-        for n, df in handles:
-            _MATERIALIZED.pop((sf_dir, n), None)
-            df.unpersist()
 
 
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:

@@ -141,7 +141,6 @@ def parity_main() -> None:
     (Spark job-group cancel + DuckDB interrupt) so one runaway op
     costs N seconds, not the sweep."""
     import os
-    import threading
     import time
 
     sf_dir = "/root/testdata/sf0.01"
@@ -158,6 +157,7 @@ def parity_main() -> None:
     from kinesis_to_firehose_spark.registry import all_ops
     from kinesis_to_firehose_spark.session import get_spark
     from tests.oracle_harness import compare
+    from tools.measure import Watchdog
 
     ops = all_ops()
     if "--ops" in sys.argv:
@@ -214,33 +214,23 @@ def parity_main() -> None:
             )
             continue
         t0 = time.monotonic()
-        timer = None
         # budget-cancel detection by the SPECIFIC mechanism, not a
         # message substring: the Spark arm records that OUR timer
         # fired before cancelling the job group; the DuckDB arm is the
         # typed InterruptException its watchdog raises. A genuine
         # failure whose message merely contains 'interrupt' stays a
         # FAIL (ADVICE r6).
-        cancelled = threading.Event()
-
-        def _cancel(group: str = name, ev: threading.Event = cancelled):
-            ev.set()
-            sc.cancelJobGroup(group)
-
-        if budget:
-            sc.setJobGroup(name, name, interruptOnCancel=True)
-            timer = threading.Timer(budget, _cancel)
-            timer.start()
+        wd = Watchdog(sc, budget)
         try:
-            compare(ops[name].fn(spark, sf_dir), ops[name].sql, sf_dir)
+            with wd:
+                wd.enter(name)
+                compare(ops[name].fn(spark, sf_dir), ops[name].sql, sf_dir)
             print(f"  ok   {name} ({time.monotonic() - t0:.2f}s)", flush=True)
         except Exception as exc:  # noqa: BLE001 — report, keep sweeping
             # a budget cancel is a TIMEOUT, not a value mismatch —
             # recorded separately so a scale-bounded op doesn't read
             # as a correctness red in the stamp
-            if cancelled.is_set() or isinstance(
-                exc, duckdb.InterruptException
-            ):
+            if wd.fired.is_set() or isinstance(exc, duckdb.InterruptException):
                 timeouts.append(name)
                 print(
                     f"  TIMEOUT {name} ({time.monotonic() - t0:.2f}s)",
@@ -253,10 +243,6 @@ def parity_main() -> None:
                     f"{str(exc)[:200]}",
                     flush=True,
                 )
-        finally:
-            if timer is not None:
-                timer.cancel()
-                sc.setJobGroup("", "")
     n_run = len(todo) - len(capped)
     print(
         f"parity: {n_run - len(failures) - len(timeouts)}/{n_run} green"

@@ -3,6 +3,8 @@ columns prune, dims broadcast, hot paths stay in codegen."""
 
 from __future__ import annotations
 
+import pytest
+
 from kinesis_to_firehose_spark.plans.explain import (
     has_broadcast_join,
     pushed_filters,
@@ -144,71 +146,6 @@ def test_interval_join_is_equi_not_nested_loop(spark):
     plan = physical_plan(OPS["interval_join"].fn(spark, SF))
     assert "NestedLoop" not in plan
     assert "HashJoin" in plan or "SortMergeJoin" in plan
-
-
-def test_no_accidental_cartesian_or_nested_loop(spark):
-    """Sweep EVERY registered batch op's physical plan: a
-    CartesianProduct or BroadcastNestedLoopJoin is only legal where a
-    deliberately tiny side is crossed in (ANN query/centroid fan-outs,
-    1-row scalar aggregates). Anything else is an accidental
-    scale-killer and fails here."""
-    from kinesis_to_firehose_spark.plans.explain import physical_plan
-
-    DELIBERATE = {
-        # tiny broadcast cross joins by design:
-        "ann_bruteforce_topk",   # 5 query vectors × candidates
-        "ann_ivf_topk",          # centroid list × vectors
-        "ann_ivf_trained_topk",  # same, trained centroids
-        "ann_ivfpq_topk",        # same coarse centroid list × vectors
-        "ann_index_search",      # stored centroid list × query vectors
-        "ann_index_probe",       # same stored-centroid cross, epoch store
-        "ann_lsh_topk",          # query-side fan-out
-        "dedup_embedding",       # block-id grid
-        "dedup_embedding_lsh",   # bucketed variant of the same kernel
-        "q15_top_supplier",      # 1-row MAX(total_revenue)
-        "q22_dormant_customers", # 1-row AVG(c_acctbal)
-        "tfidf_top_terms",       # 1-row corpus doc count
-        "q11_important_parts",   # 1-row value threshold
-        "equidepth_histogram",   # 1-row decile-edge aggregate
-        "value_outliers",        # per-type moments (≤5 rows)
-        "embedding_quantize",    # per-vector scale cross
-        "mm_ann_search",         # 3 media query vectors × candidates
-        "epoch_shuffle",         # SHUFFLE_EPOCHS-row (3) epoch grid × docs
-        "domain_mix_rebalance",  # 1-row total/source-count aggregate
-        "unigram_logprob_score", # 1-row corpus token count
-        "ppl_bucket_mix",        # composes unigram_logprob_score (same 1-row cross)
-        "bm25_search",           # 1-row (N, avgdl) scalar aggregate
-        "hybrid_search_rrf",     # 5 query vectors × candidates (sem arm)
-        "graph_pagerank",        # 1-row n / dangling-mass scalar crosses
-        "bigram_logprob_score",  # 1-row corpus token count
-        "heavy_hitters_mg",      # 1-row total-count threshold scalar
-        "contrastive_pairs",     # 1-row corpus-size scalar for the mod draw
-        "rfm_segments",          # 1-row ref-date + quintile-edge scalars
-        "collocations_pmi",      # 1-row corpus token count for PMI
-        "fk_integrity_audit",    # per-edge 1-row total × orphan summaries
-        "assoc_rules",           # 1-row basket-total scalar
-        "bootstrap_ci",          # 1-row point/ci_lo/ci_hi scalar crosses
-        "quantile_normalize",    # 1-row global-count scalar
-        "keyness_terms",         # 1-row grand-total scalar cross
-        "doc_tf_search",         # 5 query docs × candidates
-        "ann_int8_topk",         # 5 query vectors × candidates
-        "benford_audit",         # 1-row grand-total scalar cross
-        "neyman_allocation",     # 1-row weight-total / remainder crosses
-    }
-    STREAMING = {
-        "firehose_sink",
-        "checkpoint_resume",
-        "kinesis_source",
-        "kinesis_replay_source",
-    }
-    bad = []
-    for name, op in sorted(OPS.items()):
-        if name in DELIBERATE or name in STREAMING:
-            continue
-        plan = physical_plan(op.fn(spark, SF))
-        if "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan:
-            bad.append(name)
-    assert not bad, f"accidental cartesian/NL joins in: {bad}"
 
 
 def test_aqe_splits_skewed_join(spark):
@@ -370,30 +307,6 @@ def test_bucketed_documents_per_doc_pipeline_no_exchange(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_materialized_scan_sharing(spark):
-    """Inside sources.tables.materialized(): queries read the cached
-    table (InMemoryTableScan in the plan) and return identical
-    results; outside, load() goes back to parquet and the cache is
-    released."""
-    from kinesis_to_firehose_spark.plans.explain import physical_plan
-    from kinesis_to_firehose_spark.sources.tables import materialized
-
-    # other tests' localCheckpoints may already hold persisted RDDs in
-    # this shared session — assert on the DELTA, not emptiness
-    jsc = spark.sparkContext._jsc.sc()
-    persisted_before = jsc.getPersistentRDDs().size()
-    want = sorted(map(tuple, OPS["q1_pricing_summary"].fn(spark, SF).collect()))
-    with materialized(spark, SF, ("lineitem",)):
-        df = OPS["q1_pricing_summary"].fn(spark, SF)
-        assert "InMemoryTableScan" in physical_plan(df)
-        got = sorted(map(tuple, df.collect()))
-    assert got == want
-    after = physical_plan(OPS["q1_pricing_summary"].fn(spark, SF))
-    assert "InMemoryTableScan" not in after
-    # the context's cache is released (no NEW persisted RDDs remain)
-    assert jsc.getPersistentRDDs().size() <= persisted_before
-
-
 def test_shuffle_advisor_arithmetic_and_aqe_coalesce(spark):
     """The advisor rounds shuffled-bytes/target UP within clamps, and
     the over-provisioned direction it relies on is safe because AQE
@@ -447,14 +360,24 @@ def _unpartitioned_window_specs(plan_text: str) -> list[str]:
     ASC/DESC [NULLS ...]; the frame starts with specifiedwindowframe.
     So a spec whose FIRST argument is an order item or the frame has
     an empty partition spec — the move-everything-to-one-task shape
-    WindowExec warns about."""
+    WindowExec warns about. The first argument ends at the first comma
+    outside parentheses, so an order item that is a function call
+    (`coalesce(a, 0) ASC`) is read whole."""
     import re
 
     out = []
     for m in re.finditer(r"windowspecdefinition\(", plan_text):
-        seg = plan_text[m.end() : m.end() + 300]
-        seg = seg.split(", specifiedwindowframe")[0]
-        first = seg.split(", ")[0].strip()
+        depth, end = 0, len(plan_text)
+        for i in range(m.end(), len(plan_text)):
+            c = plan_text[i]
+            if c == "(":
+                depth += 1
+            elif c in ",)" and depth == 0:
+                end = i
+                break
+            elif c == ")":
+                depth -= 1
+        first = plan_text[m.end() : end].strip()
         if first.startswith("specifiedwindowframe") or re.search(
             r"\b(ASC|DESC)(\s+NULLS\s+(FIRST|LAST))?$", first
         ):
@@ -462,13 +385,96 @@ def _unpartitioned_window_specs(plan_text: str) -> list[str]:
     return out
 
 
-def test_every_unpartitioned_window_is_allowlisted(spark):
+def test_window_spec_parser_reads_function_call_order_items():
+    """A flat split at ", " cut `coalesce(a, 0) ASC NULLS FIRST` to
+    `coalesce(a` and missed this unpartitioned window."""
+    frame = "specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())"
+    plan = (
+        "Window [row_number() windowspecdefinition(coalesce(a#1, 0) ASC "
+        f"NULLS FIRST, {frame}) AS rn#2], [], [coalesce(a#1, 0) ASC NULLS FIRST]"
+    )
+    assert _unpartitioned_window_specs(plan) == ["coalesce(a#1, 0) ASC NULLS FIRST"]
+    partitioned = plan.replace(
+        "windowspecdefinition(", "windowspecdefinition(coalesce(k#3, 0), "
+    )
+    assert _unpartitioned_window_specs(partitioned) == []
+    assert _unpartitioned_window_specs(f"windowspecdefinition({frame})") == [frame]
+
+
+@pytest.fixture(scope="module")
+def batch_plans(spark):
+    """Physical plan of every registered batch op, built once and
+    shared by the plan sweeps below."""
+    from kinesis_to_firehose_spark.plans.explain import physical_plan
+
+    return {
+        name: physical_plan(op.fn(spark, SF))
+        for name, op in sorted(OPS.items())
+        if not op.streaming
+    }
+
+
+def test_no_accidental_cartesian_or_nested_loop(batch_plans):
+    """Sweep EVERY registered batch op's physical plan: a
+    CartesianProduct or BroadcastNestedLoopJoin is only legal where a
+    deliberately tiny side is crossed in (ANN query/centroid fan-outs,
+    1-row scalar aggregates). Anything else is an accidental
+    scale-killer and fails here."""
+    DELIBERATE = {
+        # tiny broadcast cross joins by design:
+        "ann_bruteforce_topk",   # 5 query vectors × candidates
+        "ann_ivf_topk",          # centroid list × vectors
+        "ann_ivf_trained_topk",  # same, trained centroids
+        "ann_ivfpq_topk",        # same coarse centroid list × vectors
+        "ann_index_search",      # stored centroid list × query vectors
+        "ann_index_probe",       # same stored-centroid cross, epoch store
+        "ann_lsh_topk",          # query-side fan-out
+        "dedup_embedding",       # block-id grid
+        "dedup_embedding_lsh",   # bucketed variant of the same kernel
+        "q15_top_supplier",      # 1-row MAX(total_revenue)
+        "q22_dormant_customers", # 1-row AVG(c_acctbal)
+        "tfidf_top_terms",       # 1-row corpus doc count
+        "q11_important_parts",   # 1-row value threshold
+        "equidepth_histogram",   # 1-row decile-edge aggregate
+        "value_outliers",        # per-type moments (≤5 rows)
+        "embedding_quantize",    # per-vector scale cross
+        "mm_ann_search",         # 3 media query vectors × candidates
+        "epoch_shuffle",         # SHUFFLE_EPOCHS-row (3) epoch grid × docs
+        "domain_mix_rebalance",  # 1-row total/source-count aggregate
+        "unigram_logprob_score", # 1-row corpus token count
+        "ppl_bucket_mix",        # composes unigram_logprob_score (same 1-row cross)
+        "bm25_search",           # 1-row (N, avgdl) scalar aggregate
+        "hybrid_search_rrf",     # 5 query vectors × candidates (sem arm)
+        "graph_pagerank",        # 1-row n / dangling-mass scalar crosses
+        "bigram_logprob_score",  # 1-row corpus token count
+        "heavy_hitters_mg",      # 1-row total-count threshold scalar
+        "contrastive_pairs",     # 1-row corpus-size scalar for the mod draw
+        "rfm_segments",          # 1-row ref-date + quintile-edge scalars
+        "collocations_pmi",      # 1-row corpus token count for PMI
+        "fk_integrity_audit",    # per-edge 1-row total × orphan summaries
+        "assoc_rules",           # 1-row basket-total scalar
+        "bootstrap_ci",          # 1-row point/ci_lo/ci_hi scalar crosses
+        "quantile_normalize",    # 1-row global-count scalar
+        "keyness_terms",         # 1-row grand-total scalar cross
+        "doc_tf_search",         # 5 query docs × candidates
+        "ann_int8_topk",         # 5 query vectors × candidates
+        "benford_audit",         # 1-row grand-total scalar cross
+        "neyman_allocation",     # 1-row weight-total / remainder crosses
+    }
+    bad = [
+        name
+        for name, plan in batch_plans.items()
+        if name not in DELIBERATE
+        and ("CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan)
+    ]
+    assert not bad, f"accidental cartesian/NL joins in: {bad}"
+
+
+def test_every_unpartitioned_window_is_allowlisted(batch_plans):
     """r12 verdict #7: sweep EVERY registered batch op's plan — an
     unpartitioned Window moves all rows to one task, so each one must
     sit on a provably BOUNDED input (the allowlist, reviewed below);
     a new one anywhere else fails here before it ships."""
-    from kinesis_to_firehose_spark.plans.explain import physical_plan
-
     # every entry is bounded by construction — row counts independent
     # of corpus size (or capped by a constant times a tiny constant):
     ALLOWLIST = {
@@ -491,17 +497,41 @@ def test_every_unpartitioned_window_is_allowlisted(spark):
         "skyline_pareto",        # ≤|p_size| DOMAIN rows (op docstring)
         "tokenize_to_ids",       # vocab-bounded id assignment rank
     }
-    STREAMING = {
-        "firehose_sink",
-        "checkpoint_resume",
-        "kinesis_source",
-        "kinesis_replay_source",
-    }
     offenders = {}
-    for name, op in sorted(OPS.items()):
-        if name in STREAMING:
-            continue
-        specs = _unpartitioned_window_specs(physical_plan(op.fn(spark, SF)))
+    for name, plan in batch_plans.items():
+        specs = _unpartitioned_window_specs(plan)
         if specs and name not in ALLOWLIST:
             offenders[name] = specs[:2]
     assert not offenders, f"unpartitioned windows outside allowlist: {offenders}"
+
+
+def test_measure_counts_build_jobs_and_repeats_sub_second_ops(spark):
+    """tools/measure.py: a job launched while building the DataFrame
+    counts as a build job, a sub-second op runs 5 times, and the job
+    group is cleared afterwards."""
+    from tools.measure import measure
+
+    def one_eager_job(spark, sf_dir):
+        spark.range(10).collect()
+        return spark.range(3)
+
+    m = measure(spark, one_eager_job, SF)
+    assert (m.build_jobs, m.runs, m.timed_out) == (1, 5, False)
+    assert abs(m.best_s - m.build_s - m.action_s) < 1e-9
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_measure_budget_overrun_is_a_timeout(spark):
+    """The watchdog cancels the running job group once the budget has
+    passed; measure() reports a timeout instead of raising."""
+    from tools.measure import measure
+
+    def sleeps_a_minute(spark, sf_dir):
+        return spark.range(1, numPartitions=1).selectExpr(
+            "java_method('java.lang.Thread', 'sleep', 60000L) AS s"
+        )
+
+    m = measure(spark, sleeps_a_minute, SF, budget_s=1.0)
+    assert m.timed_out and m.best_s < 30
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+    assert spark.range(3).count() == 3

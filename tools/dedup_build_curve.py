@@ -7,8 +7,9 @@ ramping rare-shingle document frequency (candidate mass rides Σdf²
 until the MAX_SHINGLE_DF cap saturates), which predicts the curve
 FLATTENS in the next decade. This tool measures that decade directly:
 time the raw plan functions (not the store probes) at a documents-only
-sf10 slice vs an sf30 slice, each plan SOLO in a fresh process, and
-append a "build_sf10_sf30" stanza to SCALE_CURVE.json.
+sf10 slice vs an sf30 slice, each plan SOLO in a fresh process and
+timed by tools/measure.py (count action, best of 2), and append a
+"build_sf10_sf30" stanza to SCALE_CURVE.json.
 
 Usage: python tools/dedup_build_curve.py [lo hi out.json]
        python tools/dedup_build_curve.py --one <plan> <lo> <hi>  (worker)
@@ -21,7 +22,6 @@ import math
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, ".")
 
@@ -47,19 +47,15 @@ def _docs_rows(d: str) -> int:
 def one_main() -> None:
     name, lo, hi = sys.argv[2], sys.argv[3], sys.argv[4]
     from kinesis_to_firehose_spark.session import get_spark
+    from tools.measure import measure
 
     spark = get_spark(f"build-curve-{name}")
     fn = _plan_fn(name)
     out = {"plan": name}
     for key, d in (("lo", lo), ("hi", hi)):
-        best, n = None, 0
-        for _ in range(REPEATS):
-            t0 = time.perf_counter()
-            n = fn(spark, d).count()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        out[f"t_{key}"] = round(best, 3)
-        out[f"rows_{key}"] = n
+        m = measure(spark, fn, d, action="count", reps=REPEATS)
+        out[f"t_{key}"] = round(m.best_s, 3)
+        out[f"rows_{key}"] = m.rows
     print(json.dumps(out))
 
 

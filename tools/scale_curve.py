@@ -3,6 +3,8 @@ two generated decades (default .testdata/sf1, .testdata/sf3) and
 report each op's growth exponent alpha = log(t_hi/t_lo)/log(rows_hi/
 rows_lo). alpha <= 1 is sub-linear; the 100 TB question is whether
 the curve BENDS between decades, which a single sf1 point can't show.
+Each op runs solo in a fresh process and is timed by tools/measure.py
+(count action, best of 2).
 
 Usage: python tools/scale_curve.py [lo_dir hi_dir growth out.json]
        (growth = nominal hi/lo factor, default 3.0 — used only as a
@@ -16,12 +18,12 @@ from __future__ import annotations
 import json
 import math
 import sys
-import time
 
 sys.path.insert(0, ".")
 
 from kinesis_to_firehose_spark.registry import all_ops
 from kinesis_to_firehose_spark.session import get_spark
+from tools.measure import measure
 
 # The sf1 per-op bench's heavy tail: every op over ~5.5 s at sf1 plus
 # the two formerly-ungated pair joins (the round-7 scale charges),
@@ -57,13 +59,9 @@ REPEATS = 2  # repeat 1 builds the per-corpus stores; min() reads warm
 
 
 def time_op(spark, fn, sf_dir: str) -> tuple[float, int]:
-    best, n = None, 0
-    for _ in range(REPEATS):
-        t0 = time.perf_counter()
-        n = fn(spark, sf_dir).count()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 3), n
+    """Best-of wall seconds (tools/measure.py, count action) and rows."""
+    m = measure(spark, fn, sf_dir, action="count", reps=REPEATS)
+    return round(m.best_s, 3), m.rows
 
 
 def measured_growth(lo: str, hi: str) -> tuple[int, int]:

@@ -35,10 +35,9 @@ from kinesis_to_firehose_spark.functions.decode import (
 )
 from kinesis_to_firehose_spark.registry import register
 from kinesis_to_firehose_spark.sources.tables import load
+from kinesis_to_firehose_spark.streaming.firehose import BATCH_COUNT
 
 ALLOWED_TYPES = ("click", "view", "purchase", "signup")
-
-BATCH_COUNT = 500  # main.go:51 BatchCount
 
 
 def _decoded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -380,11 +379,12 @@ def parse_syslog_lines(lines: DataFrame) -> DataFrame:
 
     r13 (guide §1.2 per-task work): seven per-group regexp_extract
     calls ran the matcher seven times per row. One anchored
-    regexp_replace now emits all seven captures \\x01-joined (the
-    payload is synthesized from [a-z]+ names and digits, so the
-    separator cannot collide) and one split recovers them. The rlike
-    guard preserves regexp_extract's exact no-match ('' per group)
-    and NULL-input (NULL per group) semantics — asserted by
+    regexp_replace now emits all seven captures \\x01-joined and one
+    split recovers them. A line whose timestamp, hostname or payload
+    itself holds \\x01 splits into more than seven parts; only those
+    rows fall back to per-group regexp_extract, so no group shifts.
+    The rlike guard preserves regexp_extract's exact no-match ('' per
+    group) and NULL-input (NULL per group) semantics — asserted by
     tests/test_sources_state.py::test_syslog_parse_survives_garbage_lines."""
     rx = _SYSLOG_RE
     sep = "\x01"
@@ -402,7 +402,9 @@ def parse_syslog_lines(lines: DataFrame) -> DataFrame:
         .when(raw.isNotNull(), F.array(*[F.lit("") for _ in range(7)]))
     )
     lines = lines.withColumn("_g", parts)
-    g = lambda i: F.col("_g").getItem(i - 1)  # noqa: E731
+    g = lambda i: F.when(  # noqa: E731
+        F.size("_g") == 7, F.col("_g").getItem(i - 1)
+    ).otherwise(F.regexp_extract("rawline", rx, i))
     pri = g(1).try_cast("bigint")
     payload = g(7)
     return lines.select(

@@ -13,7 +13,7 @@ reference's failure semantics:
 - LOG_FILE gains a ".<timestamp>.log" suffix (main.go:46, Go layout
   2006-01-02T15:04:05) — the clock is injectable so tests pin it;
 - the batch bounds are the reference constants (10 s / 500 records /
-  4 MiB, main.go:47-50), not env-tunable, matching the reference.
+  4 MiB, main.go:47-50) in streaming/firehose.py, not env-tunable.
 """
 
 from __future__ import annotations
@@ -22,11 +22,6 @@ from collections.abc import Mapping
 from dataclasses import dataclass
 from datetime import datetime
 
-from kinesis_to_firehose_spark.streaming.firehose import (
-    BATCH_COUNT,
-    BATCH_INTERVAL_S,
-    BATCH_SIZE,
-)
 from kinesis_to_firehose_spark.streaming.pipeline import KinesisSourceConfig
 
 REQUIRED_ENV = (
@@ -53,9 +48,6 @@ class PipelineEnvConfig:
     firehose_stream: str
     firehose_endpoint: str
     failed_logs_file: str
-    batch_interval_s: float = BATCH_INTERVAL_S
-    batch_count: int = BATCH_COUNT
-    batch_size: int = BATCH_SIZE
 
 
 def _get_env(env: Mapping[str, str], var: str) -> str:

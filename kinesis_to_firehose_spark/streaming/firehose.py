@@ -12,12 +12,13 @@ firehose_sender.go) in Spark's execution model:
 - Batch bounds (main.go:50-53): ≤ BATCH_COUNT records and
   ≤ BATCH_SIZE bytes per PutRecordBatch call.
 
-Spark mapping: the unit of delivery parallelism is the partition —
-`foreachPartition` workers each run the batch/retry loop against the
-transport, so delivery scales with the number of partitions instead
-of a single consumer process. Exactly-once: foreachBatch gives the
-sink the epoch id; the default transport writes epoch-scoped files so
-a replayed epoch overwrites rather than duplicates.
+Spark mapping: the unit of delivery parallelism is the partition. The
+JVM builds each record (`concat(line, '\\n')` cast to binary); a
+`mapInArrow` kernel zips the stream and record Arrow columns into
+`deliver_partition`, the one batch/retry loop, and yields no rows (a
+`noop` write runs it) — no per-record Python `Row` is built. Exactly-
+once: foreachBatch gives the sink the epoch id; the default transport
+writes epoch-scoped files so a replayed epoch overwrites.
 
 The transport is injectable (tests use flaky/failing fakes; a real
 deployment would wrap boto3 firehose PutRecordBatch — not available
@@ -30,8 +31,11 @@ import json
 import os
 import time
 import uuid
-from collections.abc import Callable, Iterable, Iterator
-from dataclasses import dataclass, field
+from collections.abc import Callable, Iterable
+from dataclasses import dataclass
+from itertools import chain
+
+from pyspark.sql import functions as F
 
 BATCH_COUNT = 500  # main.go:51
 BATCH_SIZE = 4 * 1024 * 1024  # main.go:52 (4 MiB)
@@ -241,26 +245,6 @@ class SendStats:
     bytes: int = 0
     retried_records: int = 0
     dead_letters: int = 0
-    backoff_schedule: list[float] = field(default_factory=list)
-
-
-def plan_batches(
-    records: Iterable[bytes],
-    batch_count: int = BATCH_COUNT,
-    batch_size: int = BATCH_SIZE,
-) -> Iterator[list[bytes]]:
-    """Greedy arrival-order batching under count+size bounds — the
-    sequential semantics of kbc's flush conditions (main.go:50-53)."""
-    batch: list[bytes] = []
-    size = 0
-    for r in records:
-        if batch and (len(batch) >= batch_count or size + len(r) > batch_size):
-            yield batch
-            batch, size = [], 0
-        batch.append(r)
-        size += len(r)
-    if batch:
-        yield batch
 
 
 def send_batch(
@@ -269,13 +253,11 @@ def send_batch(
     stream: str,
     stats: SendStats | None = None,
     sleep: Callable[[float], None] = time.sleep,
-    max_retries: int = MAX_RETRIES,
-    base_delay_s: float = BASE_DELAY_S,
 ) -> None:
     """Deliver one batch with the reference's retry loop
     (firehose_sender.go:96-134): resend only the failed records,
     doubling the delay each round; raise PartialSendBatchError with
-    the survivors after max_retries rounds."""
+    the survivors after MAX_RETRIES rounds."""
     stats = stats if stats is not None else SendStats()
     try:
         failed_idx = transport(batch, stream)
@@ -289,16 +271,15 @@ def send_batch(
     stats.bytes += sum(len(r) for r in batch)
 
     retries = 0
-    delay = base_delay_s
+    delay = BASE_DELAY_S
     pending = [batch[i] for i in failed_idx]
     while pending:
-        if retries >= max_retries:
+        if retries >= MAX_RETRIES:
             stats.dead_letters += len(pending)
             raise PartialSendBatchError(
                 f"Too many retries failed to put records -- stream: {stream}",
                 pending,
             )
-        stats.backoff_schedule.append(delay)
         sleep(delay)
         stats.retried_records += len(pending)
         try:
@@ -311,25 +292,24 @@ def send_batch(
 
 
 def deliver_partition(
-    rows: Iterable,
-    stream_col: str,
-    line_col: str,
+    records: Iterable[tuple[str, bytes]],
     make_transport: Callable[[], Transport],
     dead_letter_dir: str | None,
     sleep: Callable[[float], None] = time.sleep,
-    batch_interval_s: float = BATCH_INTERVAL_S,
     clock: Callable[[], float] = time.monotonic,
 ) -> SendStats:
-    """Per-partition delivery loop: group arriving rows by stream tag
-    into bounded batches, send each with retries, append exhausted
-    failures to the dead-letter file (main.go FailedLogsFile).
+    """Per-partition delivery loop over (stream, record) pairs: group
+    them by stream tag into arrival-order batches of ≤ BATCH_COUNT
+    records and ≤ BATCH_SIZE bytes (a lone over-size record ships
+    alone), send each with retries, append exhausted failures to the
+    dead-letter file (main.go FailedLogsFile).
 
-    A batch also flushes once it has been open for `batch_interval_s`
+    A batch also flushes once it has been open for BATCH_INTERVAL_S
     (main.go:48 BatchInterval: 10s) — on a trickle stream latency stays
     bounded instead of waiting for the count/size bounds. The clock is
     injectable so tests drive the timer deterministically; end-of-
     iterator still flushes everything (a Spark partition is finite, so
-    the interval matters only while rows keep arriving slowly)."""
+    the interval matters only while records keep arriving slowly)."""
     transport = make_transport()
     stats = SendStats()
     # per-stream open batches: (records, bytes, opened_at)
@@ -341,16 +321,14 @@ def deliver_partition(
         except PartialSendBatchError as exc:
             _append_dead_letters(dead_letter_dir, stream, exc.failed_records)
 
-    for row in rows:
+    for stream, rec in records:
         now = clock()
-        # interval-expire ALL open batches, not just the arriving row's
+        # interval-expire ALL open batches, not just the arriving record's
         # stream — a quiet stream must not wait for its next record.
-        for s, (b, sz, opened) in list(open_batches.items()):
-            if b and now - opened >= batch_interval_s:
+        for s, (b, _, opened) in list(open_batches.items()):
+            if now - opened >= BATCH_INTERVAL_S:
                 flush(s, b)
                 del open_batches[s]
-        stream = row[stream_col]
-        rec = (row[line_col] + "\n").encode("utf-8")
         batch, size, opened = open_batches.get(stream, ([], 0, now))
         if batch and (
             len(batch) >= BATCH_COUNT or size + len(rec) > BATCH_SIZE
@@ -360,8 +338,7 @@ def deliver_partition(
         batch.append(rec)
         open_batches[stream] = (batch, size + len(rec), opened)
     for stream, (batch, _, _) in open_batches.items():
-        if batch:
-            flush(stream, batch)
+        flush(stream, batch)
     return stats
 
 
@@ -379,8 +356,6 @@ def _append_dead_letters(
 
 def firehose_foreach_batch(
     output_root: str,
-    stream_col: str = "stream",
-    line_col: str = "line",
     dead_letter_dir: str | None = None,
     transport_factory: Callable[[int], Transport] | None = None,
 ):
@@ -389,7 +364,7 @@ def firehose_foreach_batch(
     epoch-scoped file names keep replays idempotent (exactly-once)."""
 
     def _sink(df, epoch_id: int) -> None:
-        def _run(it):
+        def _deliver(batches):
             # Deterministic task id from the partition id: a replayed
             # epoch (or a task retry after a partial write) regenerates
             # the SAME (epoch, task, seq) file names and overwrites
@@ -407,9 +382,15 @@ def firehose_foreach_batch(
                 make = lambda: RetryingTransport(  # noqa: E731
                     LocalDirTransport(output_root, epoch_id, task_id=task_id)
                 )
-            deliver_partition(it, stream_col, line_col, make, dead_letter_dir)
+            pairs = (zip(b[0].to_pylist(), b[1].to_pylist()) for b in batches)
+            deliver_partition(chain.from_iterable(pairs), make, dead_letter_dir)
+            yield from ()
 
-        df.select(stream_col, line_col).foreachPartition(_run)
+        records = df.select(
+            "stream", F.concat("line", F.lit("\n")).cast("binary").alias("record")
+        )
+        delivered = records.mapInArrow(_deliver, records.schema)
+        delivered.write.format("noop").mode("overwrite").save()
 
     return _sink
 

@@ -44,7 +44,7 @@ class KinesisSourceConfig:
     """Config surface of the reference consumer: env vars from
     launch/kinesis-to-firehose-log-archive.yml plus the KCL worker
     knobs from consumer.properties.template. Local runs map the
-    micro-batch-shaping knobs onto the file-stream simulator; the
+    micro-batch-shaping knobs onto the kinesis_replay source; the
     connector itself needs the spark-sql-kinesis jar (not shippable
     here)."""
 
@@ -102,12 +102,6 @@ class KinesisSourceConfig:
                 "this environment; use file_stream_source() locally or add "
                 "the connector jar on a real cluster."
             ) from exc
-
-    def simulator_options(self) -> dict[str, str]:
-        """Map KCL batch-shaping knobs onto the file-stream simulator."""
-        return {
-            "maxFilesPerTrigger": str(max(1, self.max_records // 2500)),
-        }
 
     def replay_options(self) -> dict[str, str]:
         """Map the reference's consumer knobs onto the kinesis_replay
@@ -175,12 +169,27 @@ def run_pipeline(
     use q.processAllAvailable() for deterministic local runs; a real
     deployment passes trigger_processing_time=PRODUCTION_TRIGGER so
     micro-batches fire on the reference's 10 s cadence."""
-    src = file_stream_source(spark, source_dir)
+    return _start_delivery(
+        file_stream_source(spark, source_dir), output_root, checkpoint_dir,
+        dead_letter_dir, transport_factory, trigger_processing_time,
+    )
+
+
+def _start_delivery(
+    events: DataFrame,
+    output_root: str,
+    checkpoint_dir: str,
+    dead_letter_dir: str | None,
+    transport_factory,
+    trigger_processing_time: str | None = None,
+):
+    """The one sink wiring behind both pipelines: decode → observed
+    delivery metrics → checkpointed foreachBatch Firehose sink."""
     # native observability channel: per-micro-batch record/byte counts
     # surface in every progress event's observedMetrics (the
     # throughput signal the reference scrapes from its KCL worker
     # logs), computed inside the running plan — no second scan.
-    delivery = decoded_stream(src).observe(
+    delivery = decoded_stream(events).observe(
         "delivery_metrics",
         F.count(F.lit(1)).alias("records"),
         F.sum(F.length("line") + 1).alias("line_bytes"),
@@ -782,16 +791,8 @@ def run_pipeline_replay(
     events = raw.select(
         F.from_json(F.col("data"), EVENT_SCHEMA).alias("e")
     ).select("e.*")
-    delivery = decoded_stream(events)
-    sink = firehose_foreach_batch(
-        output_root,
-        dead_letter_dir=dead_letter_dir,
-        transport_factory=transport_factory,
-    )
-    return (
-        delivery.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _start_delivery(
+        events, output_root, checkpoint_dir, dead_letter_dir, transport_factory
     )
 
 

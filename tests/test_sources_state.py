@@ -204,6 +204,20 @@ def test_syslog_parse_survives_garbage_lines(spark):
     assert out[3]["pri"] is None
 
 
+def test_syslog_parse_separator_in_fields_matches_regexp_extract(spark):
+    """A timestamp, hostname or payload holding the fast path's \\x01
+    join separator must parse exactly as per-group regexp_extract."""
+    from kinesis_to_firehose_spark.operators.logpipe import _SYSLOG_RE, parse_syslog_lines
+
+    line = '<9>20\x0100 ip\x01x production--view[7]: {"k":1,"t":"\x01"}'
+    df = spark.createDataFrame([(1, line)], "event_id long, rawline string")
+    r = parse_syslog_lines(df).first()
+    want = df.select(*[F.regexp_extract("rawline", _SYSLOG_RE, i) for i in range(1, 8)]).first()
+    assert want[1] == "20\x0100" and want[2] == "ip\x01x"
+    got = (str(r.pri), r.ts_str, r.hostname, r.env, r.container_app, str(r.pid))
+    assert got == tuple(want[:6]) and r.payload_k == 1
+
+
 def test_jsonl_read_captures_corrupt_records(spark, tmp_path):
     """PERMISSIVE ingestion: a malformed JSONL line must land in the
     _corrupt_record column — visible and dead-letterable — while good
@@ -1155,6 +1169,7 @@ def test_config_from_env_reference_semantics():
     source config feeds the connector option map."""
     from datetime import datetime
 
+    from kinesis_to_firehose_spark.streaming import firehose
     from kinesis_to_firehose_spark.streaming.config import (
         REQUIRED_ENV,
         config_from_env,
@@ -1176,8 +1191,8 @@ def test_config_from_env_reference_semantics():
     assert cfg.failed_logs_file == "/tmp/failed.2026-08-14T12:00:05.log"
     assert cfg.source.read_rate_limit == 300
     assert cfg.source.initial_position == "TRIM_HORIZON"
-    assert cfg.batch_count == 500 and cfg.batch_interval_s == 10.0
-    assert cfg.batch_size == 4 * 1024 * 1024
+    assert firehose.BATCH_COUNT == 500 and firehose.BATCH_INTERVAL_S == 10.0
+    assert firehose.BATCH_SIZE == 4 * 1024 * 1024
     opts = cfg.source.reader_options()
     assert opts["streamName"] == "logs"
     assert opts["startingPosition"] == "trim_horizon"

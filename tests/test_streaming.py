@@ -13,10 +13,12 @@ import pytest
 
 from kinesis_to_firehose_spark.streaming.firehose import (
     BATCH_COUNT,
+    BATCH_SIZE,
     LocalDirTransport,
     PartialSendBatchError,
     SendStats,
-    plan_batches,
+    deliver_partition,
+    firehose_foreach_batch,
     read_delivered,
     send_batch,
 )
@@ -32,17 +34,32 @@ SF = "/root/testdata/sf0.001"
 # ---------------- unit: batching + retry protocol ----------------------
 
 
+def _delivered_batches(pairs, clock=lambda: 0.0) -> dict[str, list[list[bytes]]]:
+    """Run (stream, record) pairs through deliver_partition; return each
+    stream's PutRecordBatch calls in send order."""
+    calls: dict[str, list[list[bytes]]] = {}
+
+    def transport(records, stream):
+        calls.setdefault(stream, []).append(list(records))
+        return []
+
+    deliver_partition(pairs, lambda: transport, None, clock=clock)
+    return calls
+
+
 def test_plan_batches_count_bound():
     recs = [b"x" * 10] * 1205
-    batches = list(plan_batches(recs, batch_count=500, batch_size=10**9))
-    assert [len(b) for b in batches] == [500, 500, 205]
+    interleaved = [(s, r) for r in recs for s in ("a", "b")]
+    for batches in _delivered_batches(interleaved).values():
+        assert [len(b) for b in batches] == [500, 500, 205]
 
 
 def test_plan_batches_size_bound():
-    recs = [b"x" * 400] * 30
-    batches = list(plan_batches(recs, batch_count=500, batch_size=1000))
-    assert all(sum(len(r) for r in b) <= 1000 for b in batches)
-    assert sum(len(b) for b in batches) == 30
+    recs = [b"x" * (BATCH_SIZE * 2 // 5)] * 30
+    interleaved = [(s, r) for r in recs for s in ("a", "b")]
+    for batches in _delivered_batches(interleaved).values():
+        assert all(sum(len(r) for r in b) <= BATCH_SIZE for b in batches)
+        assert sum(len(b) for b in batches) == 30
 
 
 class FlakyTransport:
@@ -223,35 +240,18 @@ def test_drop_stats_stream_views_match_batch(spark, tmp_path):
 def test_batch_interval_flushes_open_batch():
     """main.go:48 BatchInterval parity: a batch open for 10 s flushes
     even though the count/size bounds are unmet — driven by a fake
-    clock ticking 6 s per arriving row."""
-    from kinesis_to_firehose_spark.streaming.firehose import deliver_partition
-
-    calls: list[tuple[str, int]] = []
-
-    def transport(records, stream):
-        calls.append((stream, len(records)))
-        return []
-
+    clock ticking 6 s per arriving record."""
     now = [0.0]
 
     def clock():
         now[0] += 6.0
         return now[0]
 
-    rows = [{"stream": "s", "line": f"r{i}"} for i in range(4)]
-    deliver_partition(
-        iter(rows),
-        "stream",
-        "line",
-        lambda: transport,
-        None,
-        sleep=lambda _s: None,
-        batch_interval_s=10.0,
-        clock=clock,
-    )
-    # rows arrive at t=6,12,18,24; the batch opened at t=6 expires at
+    records = [("s", f"r{i}\n".encode()) for i in range(4)]
+    calls = _delivered_batches(iter(records), clock)
+    # records arrive at t=6,12,18,24; the batch opened at t=6 expires at
     # t=18 (r0,r1 flushed) and the rest flush at end-of-partition
-    assert calls == [("s", 2), ("s", 2)]
+    assert {k: [len(b) for b in v] for k, v in calls.items()} == {"s": [2, 2]}
 
 
 def test_run_pipeline_with_processing_time_trigger(spark, tmp_path):
@@ -297,6 +297,17 @@ def test_sink_task_ids_deterministic_from_partition(spark, tmp_path):
             assert pat.match(name), name
             seen += 1
     assert seen > 0
+
+
+def test_sink_delivers_non_ascii_lines_byte_identical(spark, tmp_path):
+    """The JVM builds each record as concat(line, '\\n') cast to binary;
+    what reaches the transport must be exactly the line's UTF-8 bytes
+    plus the newline — for 2-, 3- and 4-byte code points alike."""
+    lines = ['{"t":"café"}', '{"t":"日本語"}', '{"t":"🚀 ok"}', "plain"]
+    df = spark.createDataFrame([("s", ln) for ln in lines], "stream string, line string")
+    firehose_foreach_batch(str(tmp_path))(df, 0)
+    got = b"".join(p.read_bytes() for p in sorted((tmp_path / "s").iterdir()))
+    assert got == b"".join((ln + "\n").encode("utf-8") for ln in lines)
 
 
 def test_retrying_transport_client_layer():
@@ -644,23 +655,35 @@ from hypothesis import strategies as st
 
 @settings(max_examples=200, deadline=None)
 @given(
-    sizes=st.lists(st.integers(min_value=1, max_value=5000), max_size=60),
-    batch_count=st.integers(min_value=1, max_value=10),
-    batch_size=st.integers(min_value=5000, max_value=20000),
-)
-def test_plan_batches_bounds_hold_for_any_input(sizes, batch_count, batch_size):
-    """Every emitted batch respects BOTH bounds (a single oversize
-    record still ships alone — same as the reference, which must send
-    whatever Kinesis delivered); nothing is lost or reordered."""
-    recs = [b"x" * n for n in sizes]
-    batches = list(
-        plan_batches(recs, batch_count=batch_count, batch_size=batch_size)
+    runs=st.lists(
+        st.tuples(
+            st.text("abc", min_size=1, max_size=3),
+            st.integers(1, 700),
+            st.integers(8, 64) | st.integers(BATCH_SIZE // 3, BATCH_SIZE + 1),
+        ),
+        max_size=5,
     )
-    for b in batches:
-        assert len(b) <= batch_count
-        assert sum(len(r) for r in b) <= batch_size or len(b) == 1
-    flat = [r for b in batches for r in b]
-    assert flat == recs
+)
+def test_plan_batches_bounds_hold_for_any_input(runs):
+    """Every PutRecordBatch call deliver_partition makes respects BOTH
+    bounds (a single oversize record still ships alone — same as the
+    reference, which must send whatever Kinesis delivered); each
+    stream's calls concatenate to its arrival order, so nothing is
+    lost, duplicated or reordered. Input: runs of unique records dealt
+    round-robin over a stream pattern; a run of big records has 1-3."""
+    pairs: list[tuple[str, bytes]] = []
+    for pattern, n, width in runs:
+        for i in range(n if width <= 64 else n % 3 + 1):
+            rec = len(pairs).to_bytes(8, "big") + bytes(width - 8)
+            pairs.append((pattern[i % len(pattern)], rec))
+    calls = _delivered_batches(iter(pairs))
+    for stream, batches in calls.items():
+        for b in batches:
+            assert len(b) <= BATCH_COUNT
+            assert sum(len(r) for r in b) <= BATCH_SIZE or len(b) == 1
+        flat = [r for b in batches for r in b]
+        assert flat == [r for s, r in pairs if s == stream]
+    assert sum(len(b) for bs in calls.values() for b in bs) == len(pairs)
 
 
 @settings(max_examples=100, deadline=None)
